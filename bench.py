@@ -111,6 +111,8 @@ HEADLINE_SET_VERSION = 9  # v1 = r1-r4 (15 q), v2 = r5 (+4), v3 = r6 (+1), v4 = 
 # plans.
 TPCH_SUITE_METHOD_VERSION = 2
 TPCH_SUITE_PASSES = 3
+# Combined size of the final stdout lines above which print_tail warns.
+TAIL_WARN_CHARS = 1800
 
 # Per-query r1 baselines (BENCH_r01.json, sf0.1, this box) for the
 # first 15 queries — the driver's 2x envelope is against these; the
@@ -282,16 +284,11 @@ def main() -> None:
             }
         )
     )
-    # The driver records only the LAST ~2000 chars of stdout; the full
-    # JSON above outgrew that in round 7 and the summary metrics were
-    # truncated away (VERDICT r7 item #2). r14 (VERDICT r13 item #8):
-    # the 2000-char tail also cut the detailed line's per-query map, so
-    # the r13 PERF comparison starved (n_common: 0). Re-print the
-    # per-query map as ONE compact line (2-decimal, no spaces, ~1.6k
-    # chars) second-to-last: with the ~330-char envelope after it, both
-    # fit the tail; if the query set ever outgrows the window, the clip
-    # eats this line's FRONT while the envelope verdict stays intact.
-    print(
+    # Tail capture keeps only the last ~2000 chars of stdout: the full
+    # JSON above does not fit, so re-print the per-query map as ONE
+    # compact line (2-decimal, no spaces) second-to-last and a
+    # totals-only envelope LAST, which the tail then always retains.
+    print_tail(
         json.dumps(
             {
                 "metric": "per_query_sec",
@@ -301,11 +298,7 @@ def main() -> None:
                 },
             },
             separators=(",", ":"),
-        )
-    )
-    # Compact totals-only envelope line LAST so the tail capture always
-    # retains the verdict numbers.
-    print(
+        ),
         json.dumps(
             {
                 "metric": "headline_queries_total_wall",
@@ -322,8 +315,27 @@ def main() -> None:
                 "tpch_per_canary": tpch_per_canary,
                 "sf": float(sf),
             }
-        )
+        ),
     )
+
+
+def print_tail(*lines: str) -> None:
+    """Print the last stdout lines, warning loudly on stderr when they
+    exceed TAIL_WARN_CHARS together — past that a 2000-char tail
+    capture starts cutting the front of the per-query line."""
+    size = sum(len(line) + 1 for line in lines)
+    if size > TAIL_WARN_CHARS:
+        print(
+            f"WARNING: bench.py's last {len(lines)} stdout lines are {size}"
+            f" chars (> {TAIL_WARN_CHARS}); a 2000-char tail capture will"
+            " cut the per-query JSON",
+            file=sys.stderr,
+            flush=True,
+        )
+    sys.stdout.flush()  # earlier output must not interleave with the tail
+    for line in lines:
+        print(line)
+    sys.stdout.flush()
 
 
 if __name__ == "__main__":

@@ -78,22 +78,20 @@ def stage_events(spark: SparkSession, sf_dir: str) -> str:
 class DerbyCursor:
     """DB-API-shaped cursor over a driver-side ``java.sql`` connection.
 
-    Implements exactly the surface ``_delete_partition_kernel`` uses:
-    ``execute(sql, params)`` with positional ``?`` placeholders and a
-    ``rowcount`` attribute. Parameters bind via ``setObject`` on a
-    PreparedStatement — a live prepared round-trip, not string splicing.
+    Implements the surface the set-based ``delete_archived`` and the
+    streaming sinks use: ``execute(sql)`` runs one statement and sets
+    ``rowcount``. Statements take no parameters: bulk values reach the
+    database through Spark's JDBC writer, never one py4j call per value.
     """
 
     def __init__(self, jconn) -> None:
         self._jconn = jconn
         self.rowcount = -1
 
-    def execute(self, sql: str, params=None) -> None:
-        st = self._jconn.prepareStatement(sql)
+    def execute(self, sql: str) -> None:
+        st = self._jconn.createStatement()
         try:
-            for i, v in enumerate(params or ()):
-                st.setObject(i + 1, v)
-            self.rowcount = st.executeUpdate()
+            self.rowcount = st.executeUpdate(sql)
         finally:
             st.close()
 
@@ -110,6 +108,9 @@ class DerbyConnection:
     def commit(self) -> None:
         self._jconn.commit()
 
+    def rollback(self) -> None:
+        self._jconn.rollback()
+
     def close(self) -> None:
         self._jconn.close()
 
@@ -118,10 +119,11 @@ def connection_factory(spark: SparkSession, url: str):
     """A ``delete_archived``-compatible factory for an embedded Derby URL.
 
     The returned connection wraps a py4j ``java.sql.Connection``, which
-    cannot be pickled to executors — so the factory is marked
-    ``driver_side`` and ``delete_archived`` streams keys through the
-    driver instead of ``mapPartitions`` (the single-writer shape an
-    embedded database implies anyway).
+    cannot be pickled to executors, so the factory exposes its ``url``
+    and ``driver`` instead: ``delete_archived`` then stages the key
+    frame into the database with Spark's JDBC writer and deletes with
+    one set-based statement inside the JVM, never moving keys through
+    the driver's Python process.
     """
 
     def factory():
@@ -129,5 +131,6 @@ def connection_factory(spark: SparkSession, url: str):
         jconn.setAutoCommit(False)
         return DerbyConnection(jconn)
 
-    factory.driver_side = True
+    factory.url = url
+    factory.driver = DERBY_DRIVER
     return factory

@@ -11,7 +11,7 @@ reference achieves by writing its SQL string by hand, but across
 No external database ships in this harness, but Spark's own classpath
 carries embedded Apache Derby — so when no URL is configured,
 ``source_jdbc`` stages the fixture into `jdbc:derby:memory:` and the
-real JDBC branch (pushdown, range-partitioned cursors, live chunked
+real JDBC branch (pushdown, range-partitioned cursors, live set-based
 DELETE) still executes (see sources/derby.py); the parquet path remains
 only as the degraded fallback (SURVEY.md §7.4 #5: must not fail the
 suite).
@@ -20,6 +20,7 @@ suite).
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -120,7 +121,7 @@ def _delete_partition_kernel(
     idempotently rather than half-committing. Dialects:
     ``postgres`` — `DELETE ... WHERE k = ANY(%s)` (one array bind);
     ``standard`` — `DELETE ... WHERE "k" IN (?, ..)` (positional binds,
-    quoted identifier) for engines without array parameters (Derby).
+    quoted identifier) for engines without array parameters.
     """
     batch = []
     deleted = 0
@@ -164,6 +165,62 @@ def _delete_partition_kernel(
     return deleted
 
 
+def _delete_via_key_table(
+    table: str,
+    keys: DataFrame,
+    key_col: str,
+    connection_factory,
+    batch_size: int,
+) -> int:
+    """Set-based delete inside a database reachable by JDBC URL.
+
+    Stages the keys into a uniquely named key table — created with
+    ``CREATE TABLE ... AS SELECT ... WITH NO DATA`` so its column keeps
+    the source key's SQL type (Spark's own table creation would map a
+    string key to a type ``IN`` cannot compare against) — appends the
+    key frame with Spark's JDBC writer (batched inserts in executor
+    tasks), then deletes with ONE ``DELETE ... IN (SELECT ...)`` and
+    drops the key table in the same transaction. On any failure the
+    delete rolls back and the key table is dropped before re-raising.
+    """
+    key_table = f"pgarch_keys_{uuid.uuid4().hex}"
+    conn = connection_factory()
+    created = False
+    try:
+        cur = conn.cursor()
+        cur.execute(
+            f'CREATE TABLE {key_table} AS SELECT "{key_col}" FROM {table}'
+            " WITH NO DATA"
+        )
+        conn.commit()  # the writer's connections must see the table
+        created = True
+        (
+            keys.write.format("jdbc")
+            .option("url", connection_factory.url)
+            .option("driver", connection_factory.driver)
+            .option("dbtable", key_table)
+            .option("batchsize", str(batch_size))
+            .mode("append")
+            .save()
+        )
+        cur.execute(
+            f'DELETE FROM {table} WHERE "{key_col}" IN'
+            f' (SELECT "{key_col}" FROM {key_table})'
+        )
+        deleted = cur.rowcount
+        cur.execute(f"DROP TABLE {key_table}")
+        conn.commit()
+        return deleted
+    except BaseException:
+        conn.rollback()
+        if created:
+            cur.execute(f"DROP TABLE {key_table}")
+            conn.commit()
+        raise
+    finally:
+        conn.close()
+
+
 def delete_archived(
     spark: SparkSession,
     table: str,
@@ -177,12 +234,18 @@ def delete_archived(
 
     The reference deletes everything below the cutoff even though it
     archived at most 100 rows; the correct contract is to delete EXACTLY
-    the archived keys. Runs as the foreachBatch delete side of the
-    archival sink: the key frame is distributed, and each partition
-    opens its own connection and issues chunked
-    ``DELETE FROM t WHERE k = ANY(keys)`` — so delete throughput scales
-    with partitions, and no driver-side collect of the key set ever
-    happens (at 100 TB the archived-key frame is itself large).
+    the archived keys. No driver-side collect of the key set ever
+    happens (at 100 TB the archived-key frame is itself large). Two
+    shapes, chosen by the factory:
+
+    - a factory exposing ``url`` and ``driver`` (``derby.connection_factory``:
+      its py4j connection cannot ship to executors) gets the set-based
+      delete of ``_delete_via_key_table`` — keys written into the
+      database by Spark's JDBC writer, one ``DELETE ... IN (SELECT ...)``;
+    - any other DB-API factory runs distributed: each key partition
+      opens its own connection and issues chunked deletes of
+      ``batch_size`` keys in ``dialect`` (``_delete_partition_kernel``),
+      so delete throughput scales with partitions.
 
     Returns the number of deleted rows; 0 (no-op) when no database is
     configured, so the suite stays green without one.
@@ -193,19 +256,9 @@ def delete_archived(
         connection_factory = _default_connection_factory
 
     keys_only = key_df.select(F.col(key_col))
-    if getattr(connection_factory, "driver_side", False):
-        # Single-writer path for connections that cannot ship to
-        # executors (an embedded database's py4j-wrapped java.sql
-        # connection). Keys stream through toLocalIterator — bounded
-        # driver memory, one partition at a time — but throughput is
-        # one writer; the mapPartitions path below is the scale path.
-        return _delete_partition_kernel(
-            (r[0] for r in keys_only.toLocalIterator()),
-            table,
-            key_col,
-            connection_factory,
-            batch_size,
-            dialect,
+    if getattr(connection_factory, "url", None):
+        return _delete_via_key_table(
+            table, keys_only, key_col, connection_factory, batch_size
         )
     counts = keys_only.rdd.mapPartitions(
         lambda rows: [

@@ -92,23 +92,33 @@ def _scoped_state_partitions(spark: SparkSession, default: str):
         ),
     }
     _PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
+    provider = os.environ.get("SPARK_GRAFT_STATE_PROVIDER")
+    if provider:
+        provider = _PROVIDERS.get(provider.lower(), provider)
+        if "." not in provider:
+            raise ValueError(
+                f"SPARK_GRAFT_STATE_PROVIDER={provider!r}: expected one of "
+                f"{sorted(_PROVIDERS)} or a fully qualified class name"
+            )
+    # None = unset on entry: restored by unsetting, not by pinning the
+    # default provider explicitly.
+    prev_provider = spark.conf.get(_PROVIDER_KEY, None)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         os.environ.get("SPARK_GRAFT_STATE_PARTS", default),
     )
-    provider = os.environ.get("SPARK_GRAFT_STATE_PROVIDER")
-    prev_provider = spark.conf.get(_PROVIDER_KEY, _PROVIDERS["hdfs"])
     if provider:
-        spark.conf.set(
-            _PROVIDER_KEY, _PROVIDERS.get(provider.lower(), provider)
-        )
+        spark.conf.set(_PROVIDER_KEY, provider)
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
         if provider:
-            spark.conf.set(_PROVIDER_KEY, prev_provider)
+            if prev_provider is None:
+                spark.conf.unset(_PROVIDER_KEY)
+            else:
+                spark.conf.set(_PROVIDER_KEY, prev_provider)
 
 
 def _fresh_dir(*parts: str) -> str:
@@ -193,8 +203,15 @@ def archive_batch(
         .option("compression", "snappy")
         .parquet(out)
     )
-    spark = tagged.sparkSession
-    return spark.read.parquet(out).select("table_name", "event_id")
+    # Re-read with the written key schema: inferring it from the footers
+    # costs one Spark job per batch, and an empty batch (no files) reads
+    # as an empty ledger instead of failing inference.
+    keys = tagged.select("table_name", "event_id").schema
+    return (
+        tagged.sparkSession.read.schema(keys)
+        .parquet(out)
+        .select("table_name", "event_id")
+    )
 
 
 @register(

@@ -275,3 +275,35 @@ def test_zscore_kernel_degenerate_groups():
         {"event_id": [1, 2], "user_id": [7, 7], "value": [2.0, 2.0]}
     )
     assert _zscore_group(constant)["zscore"].tolist() == [0.0, 0.0]
+
+
+def test_archive_batch_ledger_has_written_schema_and_no_jobs(spark, tmp_path):
+    """The ledger re-read takes the written key schema: archive_batch
+    runs only its write job (no schema-inference job), the ledger's
+    types are the written ones, and an empty batch yields an empty
+    ledger."""
+    df = _mk_events(spark, [(1, datetime(2024, 1, 10), 1, 1.0)])
+    sc = spark.sparkContext
+    group = f"ledger-{tmp_path.name}"
+    sc.setJobGroup(group, "archive_batch jobs")
+    try:
+        ledger = archive_batch(
+            {"iot_data": df},
+            lambda d: F.col("ts") < F.lit("2024-01-15").cast("timestamp"),
+            str(tmp_path / "archive"),
+        )
+        empty = archive_batch(
+            {"iot_data": df},
+            lambda d: F.col("ts") < F.lit("2023-01-01").cast("timestamp"),
+            str(tmp_path / "archive"),
+            batch_id=1,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one write job per batch; building the ledger adds none
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    written = [(f.name, f.dataType) for f in df.select(
+        F.lit("iot_data").alias("table_name"), "event_id").schema]
+    assert [(f.name, f.dataType) for f in ledger.schema] == written
+    assert [r.event_id for r in ledger.collect()] == [1]
+    assert empty.count() == 0

@@ -1,9 +1,10 @@
 """Live JDBC round-trip tests against embedded Derby — the reference's
 extract → archive → delete-behind loop (main.go:88-145) over a real
-database connection, no monkeypatching."""
+database connection; only the injected-failure test patches a cursor."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pg_archiver_spark.catalog import load
@@ -117,3 +118,96 @@ def test_jdbc_poll_loop_partitions_arrivals(spark, sf_dir):
     assert set(rows) == {1, 2}
     assert rows[1].n_new_rows > 0 and rows[2].n_new_rows > 0
     assert rows[2].watermark > rows[1].watermark
+
+
+def _key_source(spark, key_type: str, n: int = 200):
+    """A fresh Derby table ``src`` ("k" key_type, "v" DOUBLE) holding
+    k = 0..n-1, created by SQL so the key keeps its SQL type (Spark's
+    writer would create a string key as CLOB). Returns (url, frame)."""
+    df = spark.range(0, n).select(
+        F.col("id").cast("long" if key_type == "BIGINT" else "string").alias("k"),
+        F.col("id").cast("double").alias("v"),
+    )
+    url = f"jdbc:derby:memory:keys_{next(derby._FRESH_SEQ)}"
+    jconn = spark._jvm.java.sql.DriverManager.getConnection(f"{url};create=true")
+    try:
+        jconn.createStatement().execute(
+            f'CREATE TABLE src ("k" {key_type}, "v" DOUBLE)'
+        )
+    finally:
+        jconn.close()
+    (
+        df.write.format("jdbc")
+        .option("url", url)
+        .option("dbtable", "src")
+        .option("driver", derby.DERBY_DRIVER)
+        .mode("append")
+        .save()
+    )
+    return url, df
+
+
+def _left_keys(spark, url) -> list:
+    rows = (
+        spark.read.format("jdbc")
+        .option("url", url)
+        .option("dbtable", "src")
+        .option("driver", derby.DERBY_DRIVER)
+        .load()
+        .select("k")
+        .collect()
+    )
+    return sorted(r.k for r in rows)
+
+
+def _user_tables(spark, url) -> list[str]:
+    jconn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = jconn.createStatement().executeQuery(
+            "SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T'"
+        )
+        names = []
+        while rs.next():
+            names.append(rs.getString(1))
+        return sorted(names)
+    finally:
+        jconn.close()
+
+
+def test_set_based_delete_varchar_keys_exact_and_cleaned_up(spark):
+    """VARCHAR keys compare against the staged key table (its column
+    copies the source type), exactly the given keys go, a rerun and an
+    empty key frame delete 0, and no key table is left behind."""
+    url, df = _key_source(spark, "VARCHAR(16)")
+    factory = derby.connection_factory(spark, url)
+    keys = df.filter(F.col("v") < 50).select("k")
+
+    assert delete_archived(spark, "src", keys, key_col="k", connection_factory=factory) == 50
+    assert _left_keys(spark, url) == sorted(str(i) for i in range(50, 200))
+    assert delete_archived(spark, "src", keys, key_col="k", connection_factory=factory) == 0
+    assert delete_archived(spark, "src", keys.limit(0), key_col="k", connection_factory=factory) == 0
+    assert len(_left_keys(spark, url)) == 150
+    assert _user_tables(spark, url) == ["SRC"]
+
+
+def test_set_based_delete_failure_rolls_back_and_drops_key_table(spark, monkeypatch):
+    """A DELETE forced to raise propagates, deletes nothing and still
+    drops the key table."""
+    url, df = _key_source(spark, "BIGINT")
+    factory = derby.connection_factory(spark, url)
+    execute = derby.DerbyCursor.execute
+
+    def failing_delete(self, sql):
+        if sql.startswith("DELETE"):
+            execute(self, sql)  # the rows are gone inside the transaction
+            raise RuntimeError("injected DELETE failure")
+        execute(self, sql)
+
+    monkeypatch.setattr(derby.DerbyCursor, "execute", failing_delete)
+    with pytest.raises(RuntimeError, match="injected DELETE failure"):
+        delete_archived(
+            spark, "src", df.select("k"), key_col="k", connection_factory=factory
+        )
+    monkeypatch.undo()
+    assert _left_keys(spark, url) == list(range(200))
+    assert _user_tables(spark, url) == ["SRC"]

@@ -182,3 +182,31 @@ def test_chained_window_agg_equals_batch_daily(spark, sf_dir):
     assert [(r.day_id, r.n_events, r.sum_value) for r in got] == [
         (r.day_id, r.n_events, r.sum_value) for r in ref
     ]
+
+
+def test_scoped_state_provider_unset_on_entry_is_unset_on_exit(spark, monkeypatch):
+    """A provider that was unset before the scope is unset after it,
+    not pinned to the default class."""
+    from pg_archiver_spark.streaming.archival import _scoped_state_partitions
+
+    key = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.unset(key)
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksdb")
+    with _scoped_state_partitions(spark, "4"):
+        assert spark.conf.get(key).endswith("RocksDBStateStoreProvider")
+    assert spark.conf.get(key, None) is None
+
+
+def test_scoped_state_provider_rejects_unknown_shorthand(spark, monkeypatch):
+    """A typo'd provider shorthand raises naming the allowed values and
+    leaves the session confs untouched."""
+    import pytest
+
+    from pg_archiver_spark.streaming.archival import _scoped_state_partitions
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PROVIDER", "rocksbd")
+    with pytest.raises(ValueError, match=r"\['hdfs', 'rocksdb'\]"):
+        with _scoped_state_partitions(spark, "4"):
+            pass
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
